@@ -85,26 +85,16 @@ class Dag:
 
 
 def _cut_lineage(df):
-    """Bound plan growth at a chain fan-out point.
+    """Materialize a frame that several later tasks or probes consume.
 
-    Every dedup pass / merge references its input MORE THAN ONCE
-    (scoped+anti, join+semi), so a lazily chained run's logical plan
-    doubles per stage — Catalyst analysis/physical planning over the
-    resulting tree is exponential in chain length (measured: the tiny
-    end-to-end DAG fixture spent ~6 min of pure driver CPU planning
-    the four mart writes). Truncating at each fan-out point keeps the
-    plan linear; the data cost is one materialization of a frame every
-    downstream consumer was going to execute (repeatedly) anyway.
-
-    Local mode: ``localCheckpoint`` (executor-local blocks are safe
-    there) replaces the logical plan outright. Cluster: ``persist`` +
-    eager count — consumers swap the cached subtree for
-    InMemoryRelation before the optimizer runs, bounding planner cost
-    per consumer while keeping recoverable lineage, and the eager
-    build stops AQE's concurrently-submitted consumer stages from
-    racing to compute the uncached prefix twice (round-12 finding;
-    shared with the query-side multi-consumer persists via
-    functions.perf.materialize_cut)."""
+    The DAG's frames are lazy: without a cut, every consumer re-runs
+    (and Catalyst re-plans) the whole chain of merges and joins
+    behind it. A merge or join that references its input more than
+    once also grows the plan with each stage chained on top of it.
+    Cutting where a frame fans out to its consumers builds it once and
+    keeps each consumer's plan shallow (see
+    functions.perf.materialize_cut for the local vs. cluster
+    mechanics)."""
     from rialto_airflow_spark.functions.perf import materialize_cut
 
     return materialize_cut(df)
@@ -264,14 +254,12 @@ def build_harvest_dag() -> Dag:
             ctx["pubs"], ctx["author_edges"], ctx["funder_edges"],
             return_losers=True,
         )
-        # five passes each reference their input 2-3x — cut here so
-        # distill/link/orphans/marts plan against shallow frames
-        # instead of a 2^5-fanout tree (see _cut_lineage)
-        pubs, ae, fe = _cut_lineage(pubs), _cut_lineage(ae), _cut_lineage(fe)
-        if _tracking(ctx) and losers is not None:
-            losers = _cut_lineage(losers)
-        ctx["pubs"], ctx["author_edges"], ctx["funder_edges"] = pubs, ae, fe
-        if _tracking(ctx) and losers is not None:
+        # distill, link_funders, orphans, complete and the marts each
+        # consume these: materialize the merged frames once here
+        ctx["pubs"], ctx["author_edges"], ctx["funder_edges"] = (
+            _cut_lineage(pubs), _cut_lineage(ae), _cut_lineage(fe)
+        )
+        if _tracking(ctx):
             # losers are the run's pub deletes; survivors gain the
             # re-pointed edges (flags + edge groups change on both)
             both = losers.select(
@@ -434,6 +422,7 @@ def build_harvest_dag() -> Dag:
             spark = ctx["pubs"].sparkSession
             is_full = bool(ctx.get("is_full", False))
             nb = ctx.get("pubs_manifest_buckets", 64)
+            pubs_table = ctx.get("pubs_table", "publications")
             changed_pub = changed_edge = None
             if _tracking(ctx):
                 # the run's own changed-key sets (round-11 verdict #1):
@@ -460,8 +449,16 @@ def build_harvest_dag() -> Dag:
                 for part in ctx["__touched_edge_pub_ids"]:
                     changed_edge = changed_edge.unionByName(part)
                 changed_edge = changed_edge.distinct()
+                if store.current_info(pubs_table) is not None:
+                    # each keyed replace probes these sets four times
+                    # (empty check, dirty-bucket collect, fragment
+                    # semi-join, slice anti-join): build the unions of
+                    # tracked parts once, not per probe. A bootstrap (no
+                    # stored head yet) never reads them.
+                    changed_pub = _cut_lineage(changed_pub)
+                    changed_edge = _cut_lineage(changed_edge)
             _persist_keyed_table(
-                store, spark, ctx.get("pubs_table", "publications"),
+                store, spark, pubs_table,
                 ctx["pubs"], "id",
                 n_buckets=nb,
                 compare_cols=ctx.get("pubs_compare_cols"),

@@ -304,12 +304,6 @@ def connected_components(
     # contract pass True and the edge list checkpoints as-is; the
     # default keeps the general path for arbitrary pair sources
     # (reversed duplicates, self-loops).
-    import os as _os
-
-    # call-time A/B escape hatch (scripts/probe_ab.py): =0 forces the
-    # general re-canonicalize path even for canonical callers
-    if _os.environ.get("RIALTO_CC_ASSUME_CANON") == "0":
-        assume_canonical = False
     if assume_canonical:
         canon = pairs.select(
             F.col(id_a).alias("src"), F.col(id_b).alias("dst")
@@ -424,36 +418,21 @@ def connected_components(
     # 2.59 s at two; the original 62-s-box measurement that motivated
     # the change was taken under heavy hypervisor steal and did not
     # replicate.
-    import os as _os
-
-    fused = _os.environ.get("RIALTO_CC_FUSED_PROBE", "1") != "0"
     steps = 1
     while steps < max_iter:
-        if fused:
-            # LAZY checkpoint + one max(__chg) aggregate: the agg is
-            # the first action over the marked RDD, so it materializes
-            # the checkpoint AND answers convergence in ONE job —
-            # round 13, halving the per-round job count (the eager
-            # checkpoint + separate probe paid two scheduler round
-            # trips per round). Unlike the reverted two-steps-per-
-            # barrier shape this stacks nothing: still one
-            # propagation step per materialization.
-            stepped = one_step(labels).localCheckpoint(eager=False)
-            changed = stepped.agg(F.max("__chg")).first()[0]
-            labels = stepped.select(
-                "id", F.col("__new_label").alias("label")
-            )
-            steps += 1
-            if not changed:
-                break
-        else:
-            stepped = one_step(labels).localCheckpoint()
-            labels = stepped.select(
-                "id", F.col("__new_label").alias("label")
-            )
-            steps += 1
-            if stepped.where(F.col("__chg")).limit(1).count() == 0:
-                break
+        # LAZY checkpoint + one max(__chg) aggregate: the agg is the
+        # first action over the marked RDD, so it materializes the
+        # checkpoint AND answers convergence in ONE job — round 13,
+        # halving the per-round job count (the eager checkpoint +
+        # separate probe paid two scheduler round trips per round).
+        # Unlike the reverted two-steps-per-barrier shape this stacks
+        # nothing: still one propagation step per materialization.
+        stepped = one_step(labels).localCheckpoint(eager=False)
+        changed = stepped.agg(F.max("__chg")).first()[0]
+        labels = stepped.select("id", F.col("__new_label").alias("label"))
+        steps += 1
+        if not changed:
+            break
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

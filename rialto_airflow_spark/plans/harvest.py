@@ -4,18 +4,22 @@ author-derived flags (SURVEY.md §2.10, §2.4 A2/A3/A9, §2.3 J4/J5/J9).
 
 The reference walks duplicate groups row-by-row in Python
 (harvest_incremental/deduplicate.py, funders/linker.py); here each
-pass is one window/join plan. Sequential pass order (openalex → dim →
-sulpub → wos_id → pubmed_id — deduplicate.py:14-35) is preserved
-because each merge changes the survivor set for the next key.
+dedup pass is one window over a narrow frame of the in-scope rows.
+Sequential pass order (openalex → dim → sulpub → wos_id → pubmed_id —
+deduplicate.py:14-35) is preserved because each merge changes the
+survivor set for the next key.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rialto_airflow_spark.functions.normalize import normalize_funder_name
+from rialto_airflow_spark.functions.perf import materialize_cut
 from rialto_airflow_spark.operators.merge import merge_on_key
 
 # the five platform-identity keys, in reference pass order
@@ -59,87 +63,87 @@ def upsert_source_batch(
     )
 
 
-def dedup_pass(
-    pubs: DataFrame,
-    author_edges: DataFrame,
-    funder_edges: DataFrame,
-    key_expr: str,
-    id_col: str = "id",
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """One platform-key dedup pass (A2 detect + A3 merge).
-
-    Scope: rows with null DOI and a non-null key (deduplicate.py:
-    43-46). Survivor = newest updated_at (merge_pubs sort,
-    deduplicate.py:195-198; ties broken by id for determinism);
-    edges of losers re-point to the survivor with ON CONFLICT DO
-    NOTHING semantics (dropDuplicates); losers are deleted.
-
-    One shuffle on the key for the window + one broadcast-able join
-    per edge table (the old->survivor map is tiny relative to edges).
-
-    Returns (pubs, author_edges, funder_edges, losers) — ``losers``
-    is the (loser_id, survivor_id) map of this pass, the run's delete
-    set plus the survivors whose edge groups it re-pointed (the
-    O(changes) persistence threads both into its changed-key set).
-    """
-    key = F.expr(key_expr)
-    scoped = pubs.where(F.col("doi").isNull() & key.isNotNull()).select(
-        F.col(id_col), key.alias("__key"), F.col("updated_at")
-    )
-    w = Window.partitionBy("__key").orderBy(
-        F.col("updated_at").desc(), F.col(id_col).asc()
-    )
-    ranked = scoped.select(
-        F.col(id_col),
-        F.col("__key"),
-        F.row_number().over(w).alias("__rn"),
-        F.first(F.col(id_col)).over(w).alias("__survivor"),
-    )
-    losers = ranked.where(F.col("__rn") > 1).select(
-        F.col(id_col).alias("__old"), F.col("__survivor")
-    )
-
-    def repoint(edges: DataFrame) -> DataFrame:
-        e = edges.join(
-            F.broadcast(losers), edges["publication_id"] == F.col("__old"), "left"
-        )
-        return e.select(
-            F.coalesce(F.col("__survivor"), F.col("publication_id")).alias(
-                "publication_id"
-            ),
-            *[c for c in edges.columns if c != "publication_id"],
-        ).dropDuplicates(edges.columns)
-
-    pubs_out = pubs.join(
-        F.broadcast(losers), pubs[id_col] == losers["__old"], "left_anti"
-    )
-    loser_map = losers.select(
-        F.col("__old").alias("loser_id"),
-        F.col("__survivor").alias("survivor_id"),
-    )
-    return pubs_out, repoint(author_edges), repoint(funder_edges), loser_map
-
-
 def remove_duplicates(
     pubs: DataFrame,
     author_edges: DataFrame,
     funder_edges: DataFrame,
     return_losers: bool = False,
 ):
-    """A2/A3 — all five platform-key passes in reference order.
-    ``return_losers=True`` appends the union of every pass's
-    (loser_id, survivor_id) map as a fourth element."""
-    all_losers: DataFrame | None = None
-    for _, key_expr in PLATFORM_KEYS:
-        pubs, author_edges, funder_edges, losers = dedup_pass(
-            pubs, author_edges, funder_edges, key_expr
+    """A2/A3 — the five platform-key dedup passes, in reference order.
+
+    A pass scopes rows with a null DOI and a non-null key
+    (deduplicate.py:43-46). The survivor of each key group is the
+    newest ``updated_at`` (merge_pubs sort, deduplicate.py:195-198),
+    ties broken by id for determinism. Losers are deleted and their
+    edges re-point to the survivor with ON CONFLICT DO NOTHING
+    semantics (dropDuplicates).
+
+    A pass reads only ``id``, ``updated_at`` and its key, and only
+    deletes rows. So the null-DOI rows are projected ONCE to a narrow
+    frame (id, updated_at and the five key expressions) and
+    materialized. Each pass ranks what the earlier passes left of that
+    frame and materializes its small (loser_id, survivor_id) map. The
+    maps then apply once: publications leave through one broadcast
+    anti-join on their union; edges re-point through the five maps in
+    pass order (a pass-1 survivor that loses later follows the chain)
+    and deduplicate once. Every plan here is linear in the number of
+    passes.
+
+    ``return_losers=True`` appends the union of the maps as a fourth
+    element: the run's delete set plus the survivors whose edge groups
+    were re-pointed (the O(changes) persistence threads both into its
+    changed-key set)."""
+    keys = [f"__key_{name}" for name, _ in PLATFORM_KEYS]
+    narrow = materialize_cut(
+        pubs.where(F.col("doi").isNull()).select(
+            "id",
+            "updated_at",
+            *[F.expr(e).alias(k) for k, (_, e) in zip(keys, PLATFORM_KEYS)],
         )
-        all_losers = (
-            losers if all_losers is None else all_losers.unionByName(losers)
+    )
+    maps: list[DataFrame] = []
+    left = narrow
+    for k in keys:
+        w = Window.partitionBy(k).orderBy(
+            F.col("updated_at").desc(), F.col("id").asc()
         )
-    if return_losers:
-        return pubs, author_edges, funder_edges, all_losers
-    return pubs, author_edges, funder_edges
+        ranked = left.where(F.col(k).isNotNull()).select(
+            F.col("id").alias("loser_id"),
+            F.row_number().over(w).alias("__rn"),
+            F.first("id").over(w).alias("survivor_id"),
+        )
+        m = materialize_cut(
+            ranked.where(F.col("__rn") > 1).select("loser_id", "survivor_id")
+        )
+        maps.append(m)
+        left = left.join(
+            F.broadcast(m), F.col("id") == F.col("loser_id"), "left_anti"
+        )
+    losers = reduce(DataFrame.unionByName, maps)
+
+    def repoint(edges: DataFrame) -> DataFrame:
+        rest = [c for c in edges.columns if c != "publication_id"]
+        out = edges
+        for m in maps:
+            out = out.join(
+                F.broadcast(m),
+                F.col("publication_id") == F.col("loser_id"),
+                "left",
+            ).select(
+                F.coalesce("survivor_id", "publication_id").alias(
+                    "publication_id"
+                ),
+                *rest,
+            )
+        return out.dropDuplicates(edges.columns)
+
+    pubs_out = pubs.join(
+        F.broadcast(losers.select("loser_id")),
+        pubs["id"] == F.col("loser_id"),
+        "left_anti",
+    )
+    out = (pubs_out, repoint(author_edges), repoint(funder_edges))
+    return out + (losers,) if return_losers else out
 
 
 def remove_orphans(

@@ -15,6 +15,9 @@ Design rules (driver contract):
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -32,6 +35,16 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+
+def scratch_dir(prefix: str) -> str:
+    """A local temporary directory for a query's checkpoints, sinks or
+    stores. The returned plan may read it lazily after the query
+    function returns, so it cannot be removed inside the query; it is
+    removed at interpreter exit instead."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def register(name: str, oracle: str | None, headline: bool = False):

@@ -1772,8 +1772,12 @@ class TableStore:
         broadcasts into the slice anti-join. Commit CASes + retries on
         a concurrent manifest writer (see :meth:`upsert_manifest`)."""
         from .commitlog import CommitConflict
+        from .functions.perf import materialize_cut
 
         store = self._store(name)
+        # read twice below (dirty-bucket collect, bucket write) and
+        # once more by the file-range probe: build it once
+        fragment = materialize_cut(fragment)
         while True:
             seq0 = store.current_seq()
             info = self.current_info(name)

@@ -21,3 +21,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    for item in items:
+        if item.get_closest_marker("slowlane") is not None:
+            stash = item.config.stash
+            stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + 1
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    """The default lane (pyproject addopts) deselects the slowlane
+    batteries; say so at the end instead of letting them go unseen."""
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"{n} slowlane tests deselected; run them with: "
+            "python -m pytest tests/ -m slowlane"
+        )
